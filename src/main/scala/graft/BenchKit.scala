@@ -267,7 +267,9 @@ object BenchKit {
     * offset (seconds from run start) and `minis` the interleaved
     * mini-canary readings — together they localize contention per query:
     * over-budget queries whose covering mini reading is inflated land in
-    * `contended` instead of `budget_warn`. */
+    * `contended` instead of `budget_warn`. `buildSec` holds each artifact
+    * group's untimed build seconds (`<group>_build_sec`), `warmFailures`
+    * every warm build that failed, by name. */
   def detailJson(
       results: Map[String, Double],
       errors: collection.Map[String, String],
@@ -277,25 +279,19 @@ object BenchKit {
       canariesMem: Seq[Double],
       t0s: Map[String, Double] = Map.empty,
       minis: Seq[MiniReading] = Seq.empty,
-      ivfBuildSec: Double,
-      mhBuildSec: Double,
-      clfBuildSec: Double = 0.0,
-      pqBuildSec: Double = 0.0,
-      curBuildSec: Double = 0.0,
-      tokBuildSec: Double = 0.0,
+      buildSec: collection.Map[String, Double],
+      warmFailures: collection.Map[String, String] = Map.empty,
       prevTimes: Map[String, Double] = Map.empty,
       sfDir: String): String = {
     val qs = results.toSeq.sortBy(_._1)
       .map { case (k, v) => s"${jstr(k)}:${r3f(v)}" }
       .mkString("{", ",", "}")
-    val errJson = errors.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }
-      .mkString("{", ",", "}")
+    def strMap(m: collection.Map[String, String]) =
+      m.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
+    val buildJson = buildSec.map { case (g, sec) => s""""${g}_build_sec":${r3f(sec)},""" }.mkString
     val rrJson = reruns.toSeq.sortBy(_._1).map { case (k, r) =>
       s"${jstr(k)}:{" + s""""first":${r3f(r.first)},"rerun":${r3f(r.rerun)}}"""
     }.mkString("{", ",", "}")
-    val canaryJson = canaries.map(r3f).mkString("[", ",", "]")
-    val canaryParJson = canariesPar.map(r3f).mkString("[", ",", "]")
-    val canaryMemJson = canariesMem.map(r3f).mkString("[", ",", "]")
     val t0Json = t0s.toSeq.sortBy(_._1)
       .map { case (k, v) => s"${jstr(k)}:${r3f(v)}" }
       .mkString("{", ",", "}")
@@ -317,14 +313,34 @@ object BenchKit {
     val (warn, contended) = classifyBudget(results, t0s, minis)
     val budgetWarn = warn.map(jstr).mkString("[", ",", "]")
     val contendedJson = contended.map(jstr).mkString("[", ",", "]")
-    s"""{"metric":"total","value":${r3f(total)},"unit":"sec",""" +
-      s""""ivf_build_sec":${r3f(ivfBuildSec)},"mh_build_sec":${r3f(mhBuildSec)},""" +
-      s""""clf_build_sec":${r3f(clfBuildSec)},"pq_build_sec":${r3f(pqBuildSec)},""" +
-      s""""cur_build_sec":${r3f(curBuildSec)},"tok_build_sec":${r3f(tokBuildSec)},""" +
-      s""""canary_ms":$canaryJson,"canary_par_ms":$canaryParJson,"canary_mem_ms":$canaryMemJson,""" +
+    s"""{"metric":"total","value":${r3f(total)},"unit":"sec",$buildJson""" +
+      s""""warm_failures":${strMap(warmFailures)},""" +
+      canaryFields(canaries, canariesPar, canariesMem) +
       s""""mini_canary":$miniJson,""" +
       s""""budget_warn":$budgetWarn,"contended":$contendedJson,""" +
       s""""queries":$qs,"vs_prev_committed":$vsPrevJson,""" +
-      s""""t0_s":$t0Json,"reruns":$rrJson,"errors":$errJson,"sf":"$sfDir"}"""
+      s""""t0_s":$t0Json,"reruns":$rrJson,"errors":${strMap(errors)},"sf":"$sfDir"}"""
   }
+
+  private def canaryFields(canaries: Seq[Double], canariesPar: Seq[Double], canariesMem: Seq[Double]) = {
+    def arr(xs: Seq[Double]) = xs.map(r3f).mkString("[", ",", "]")
+    s""""canary_ms":${arr(canaries)},"canary_par_ms":${arr(canariesPar)},"canary_mem_ms":${arr(canariesMem)},"""
+  }
+
+  /** The stdout totals line. The per-query map goes to the detail file:
+    * both r3 and r4 lost the head of a long per-query stdout line to the
+    * driver's tail capture, and a file cannot truncate. */
+  def summaryJson(
+      results: Map[String, Double],
+      nErrors: Int,
+      nReruns: Int,
+      nWarmFailures: Int,
+      canaries: Seq[Double],
+      canariesPar: Seq[Double],
+      canariesMem: Seq[Double],
+      sfDir: String): String =
+    s"""{"metric":"total","value":${r3f(results.values.filter(_ >= 0).sum)},"unit":"sec",""" +
+      s""""n_queries":${results.size},"n_errors":$nErrors,"n_reruns":$nReruns,""" +
+      s""""n_warm_failures":$nWarmFailures,""" + canaryFields(canaries, canariesPar, canariesMem) +
+      s""""sf":"$sfDir","detail":"target/bench_detail.json"}"""
 }

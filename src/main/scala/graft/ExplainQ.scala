@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Print the formatted physical plan of a declared query —
   * `runMain graft.ExplainQ <name>`. Plan-shape iteration tool (SURVEY §6:
   * explain until it's the plan you'd want, not the first that passes).
@@ -9,17 +7,12 @@ import org.apache.spark.sql.SparkSession
 object ExplainQ {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val h = Harness(sfDir)
     args.foreach { name =>
       println(s"===== $name =====")
-      println(SparkEntry.queries(name)(spark, sfDir).queryExecution.explainString(
+      println(h.queries(name)(h.spark, sfDir).queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode))
     }
-    spark.stop()
+    h.stop()
   }
 }

@@ -6,7 +6,10 @@ import org.apache.spark.sql.SparkSession
   * depends on, in one place. Users (and the reference's `env` setup,
   * `FlinkCEPExample.scala:46-47`) get event-time semantics, the
   * MATCH_RECOGNIZE parser, and the state-store provider the streaming CEP
-  * operator requires, without hunting for flags.
+  * operator requires, without hunting for flags. It is the only place a
+  * session is built: [[Harness.session]] (every driver and measurement
+  * tool), the test suites' `TestSpark` and the `cepbench` benchmark all
+  * start from [[builder]], and `SessionGuardSpec` fails on any other.
   *
   * Cache ownership convention: operators that consume an expensive pass
   * from more than one plan branch mark it cached (MEMORY_AND_DISK, via
@@ -16,8 +19,8 @@ import org.apache.spark.sql.SparkSession
   * `graft.Caches.clear()` between logical jobs — it unpersists exactly the
   * library-registered caches, leaving the owner's own cached relations
   * alone (plus `getPersistentRDDs.values.foreach(_.unpersist(false))` for
-  * checkpoint blocks) — exactly as `graft.Bench` and `graft.Verify` do
-  * between queries. The operators cannot unpersist for you: their results
+  * checkpoint blocks) — exactly as [[Harness.cleanup]] does between
+  * queries. The operators cannot unpersist for you: their results
   * are lazy DataFrames, and dropping the blocks before the caller's
   * terminal action would just recompute the pass per branch.
   */

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Measurement tool (guide §1: measure first — optimization round 16).
   *
   * Splits every declared query's wall time into
@@ -12,8 +10,8 @@ import org.apache.spark.sql.SparkSession
   *
   * Emits one JSON line per query to target/phase_profile.json so the floor
   * composition (driver planning vs execution) is measurable instead of
-  * guessed. Methodology matches [[Bench]] (same session shape, caches
-  * cleared between queries, queries name-sorted); this tool is measurement
+  * guessed. Methodology matches [[Bench]] (the same [[Harness]] session,
+  * warm-up and timed run, queries name-sorted); this tool is measurement
   * infrastructure only — it is not part of the bench contract and never
   * writes BENCH files.
   */
@@ -22,86 +20,29 @@ object PhaseProfile {
     val only: Set[String] =
       if (args.nonEmpty) args(0).split(',').toSet else Set.empty
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.quietAuditedWindowWarnings()
-    // same untimed warmup as Bench
-    SparkEntry.queries.get("q_scan_filter_project")
-      .foreach(fn => try fn(spark, sfDir).count() catch { case _: Throwable => () })
-    try graft.sources.Tables.events(spark, sfDir).count()
-    catch { case _: Throwable => () }
-    Seq("documents", "embeddings").foreach(t =>
-      try graft.sources.Tables.table(spark, sfDir, t).count()
-      catch { case _: Throwable => () })
-    try graft.relational.Joins.ensureBucketedTables(spark, sfDir)
-    catch { case _: Throwable => () }
-    try graft.pipeline.Similarity.annIvfProbe(spark, sfDir).count()
-    catch { case _: Throwable => () }
-    try graft.pipeline.Similarity.trainIndex(
-      spark, sfDir, graft.pipeline.Similarity.KnnK)
-    catch { case _: Throwable => () }
-    try graft.pipeline.Similarity.trainMergedIndex(spark, sfDir)
-    catch { case _: Throwable => () }
-    try graft.pipeline.Dedup.trainIndex(spark, sfDir)
-    catch { case _: Throwable => () }
-    try graft.pipeline.Dedup.trainMergedIndex(spark, sfDir)
-    catch { case _: Throwable => () }
-    try graft.pipeline.Dedup.trainSigIndex(spark, sfDir)
-    catch { case _: Throwable => () }
-    try graft.pipeline.TextAnalysis.trainClassifier(spark, sfDir)
-    catch { case _: Throwable => () }
-    try graft.pipeline.Embeddings.trainPq(spark, sfDir)
-    catch { case _: Throwable => () }
-    try graft.pipeline.Curation.trainEvalShingles(spark, sfDir)
-    catch { case _: Throwable => () }
-    try graft.pipeline.Tokenizer.trainTokenizers(spark, sfDir)
-    catch { case _: Throwable => () }
-    Caches.clear()
-    spark.catalog.clearCache()
-
-    val sorted = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.isEmpty || only.contains(n) }
-    val sb = new StringBuilder("[\n")
-    var first = true
-    sorted.foreach { case (name, fn) =>
+    val h = Harness(sfDir)
+    h.warm()
+    val sorted = h.queries.keys.toSeq.sorted
+      .filter(n => only.isEmpty || only.contains(n))
+    val rows = sorted.flatMap { name =>
       System.err.println(s"[phase] $name")
-      try {
-        val t0 = System.nanoTime()
-        val df = fn(spark, sfDir)
-        val tBuild = (System.nanoTime() - t0) / 1e9
-        val t1 = System.nanoTime()
-        df.count()
-        val tCount = (System.nanoTime() - t1) / 1e9
-        val phases = df.queryExecution.tracker.phases
+      val t = h.run(name) { df => df.count(); df.queryExecution.tracker }
+      t.result.toOption.map { tracker =>
+        val phases = tracker.phases
           .map { case (p, t) => p -> (t.endTimeMs - t.startTimeMs) / 1e3 }
-        val phaseSum = phases.values.sum
+        val tCount = t.sec - t.buildSec
         val pj = phases.toSeq.sortBy(_._1)
           .map { case (p, s) => s""""$p":${BenchKit.r3f(s)}""" }
           .mkString(",")
-        if (!first) sb.append(",\n")
-        first = false
-        sb.append(
-          s"""{"q":"$name","build":${BenchKit.r3f(tBuild)},""" +
+        s"""{"q":"$name","build":${BenchKit.r3f(t.buildSec)},""" +
           s""""count":${BenchKit.r3f(tCount)},""" +
-          s""""exec":${BenchKit.r3f(tCount - phaseSum)},$pj}""")
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"[phase] $name FAILED: ${e.getMessage}")
+          s""""exec":${BenchKit.r3f(tCount - phases.values.sum)},$pj}"""
       }
-      Caches.clearAll()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
     }
-    sb.append("\n]\n")
     val p = java.nio.file.Paths.get("target/phase_profile.json")
     java.nio.file.Files.createDirectories(p.getParent)
-    java.nio.file.Files.writeString(p, sb.toString)
+    java.nio.file.Files.writeString(p, rows.mkString("[\n", ",\n", "\n]\n"))
     println(s"[phase] wrote ${sorted.size} entries to $p")
-    spark.stop()
+    h.stop()
   }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,15 +9,7 @@ object Verify {
       case Array(s, o)    => (s, o, None)
       case Array(s, o, f) => (s, o, Some(f.split(',').toSet))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.quietAuditedWindowWarnings()
+    val h = Harness(sfDir)
     new java.io.File(outDir).mkdirs()
     // Per-query health (rows written or the error), INCLUDING the non-oracle
     // queries (CEP/MR/approx) that have no DuckDB compare — so a regression
@@ -26,24 +17,13 @@ object Verify {
     // bench errors (r5: all 9 CEP/MR queries silently vanished from the
     // correctness JSON when they errored).
     val status = scala.collection.mutable.LinkedHashMap[String, (Long, String)]()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
+    h.queries.keys.filter(name => only.forall(_.contains(name))).foreach { name =>
+      val t = h.run(name) { df =>
+        df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
         // footer-metadata count of the file just written — no recompute
-        status(name) = (spark.read.parquet(s"$outDir/$name").count(), null)
-      } catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        status(name) = (-1L, Option(e.getMessage).getOrElse(e.getClass.getName).take(200))
+        h.spark.read.parquet(s"$outDir/$name").count()
       }
-      // per-query working-set caches: don't let 64 queries accumulate
-      // (Caches.clearAll = registered caches + materialized blocks; clearCache = any
-      // other SQL relations; unpersist = RDD-level checkpoint blocks)
-      Caches.clearAll()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      status(name) = t.result.fold(e => (-1L, Harness.message(e)), rows => (rows, null))
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -64,12 +44,12 @@ object Verify {
     // tolerance verdicts for the no-oracle approx queries — the same
     // bounds CurationSpec enforces, emitted where the driver can see a
     // regression (r6 verdict: rows-only reporting let them drift silently)
-    val approx = graft.pipeline.ApproxCheck.verdicts(spark, sfDir, status.keySet.toSet)
+    val approx = graft.pipeline.ApproxCheck.verdicts(h.spark, sfDir, status.keySet.toSet)
     val statusJson = status.map { case (k, (rows, err)) =>
       val extra = approx.get(k).map(", " + _).getOrElse("")
       s"${q(k)}: {\"rows\": $rows, \"err\": ${if (err == null) "null" else q(err)}$extra}"
     }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/query_status.json"), statusJson)
-    spark.stop()
+    h.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.pattern.{AfterMatchSkip, Pattern}
@@ -25,6 +25,17 @@ object EventPatterns {
 
   val WithinMs: Long = 3600L * 1000L
 
+  /** The `events` table as typed rows, event time as epoch micros. */
+  private def eventRows(spark: SparkSession, sfDir: String): Dataset[EventRow] = {
+    import spark.implicits._
+    graft.sources.Tables.events(spark, sfDir)
+      .select($"event_id", unix_micros($"ts").as("ts_us"), $"user_id", $"event_type")
+      .as[EventRow]
+  }
+
+  /** Epoch micros truncated to the second, as a timestamp. */
+  private def sec(c: Column): Column = timestamp_micros(c - pmod(c, lit(1000000L)))
+
   def pattern: Pattern[EventRow] =
     Pattern.begin[EventRow]("A", AfterMatchSkip.SkipPastLastEvent)
       .where(_.event_type == "error")
@@ -36,17 +47,12 @@ object EventPatterns {
   /** Tagged match/timeout detection (kind = "match" | "timeout");
     * timestamps second-truncated in the output projection only
     * (ns-parquet caveat, FIXTURES.md §B.1). */
-  def detect(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val events = graft.sources.Tables.events(spark, sfDir)
-      .select($"event_id", unix_micros($"ts").as("ts_us"), $"user_id", $"event_type")
-      .as[EventRow]
-    detectOf(events)
-  }
+  def detect(spark: SparkSession, sfDir: String): DataFrame =
+    detectOf(eventRows(spark, sfDir))
 
   /** [[detect]] over any typed event set — the probe entry point
     * ([[graft.ScaleProbe]] drives it at 10M events with a 30%-hot key). */
-  def detectOf(events: org.apache.spark.sql.Dataset[EventRow]): DataFrame = {
+  def detectOf(events: Dataset[EventRow]): DataFrame = {
     val spark = events.sparkSession
     import spark.implicits._
     val raw = Cep.matchPattern[Long, EventRow, CepRaw](
@@ -61,8 +67,6 @@ object EventPatterns {
         },
       emitTimeout = (uid, t) =>
         t.first("A").map(a => CepRaw("timeout", uid, a.ts_us, -1L)))
-    def sec(c: org.apache.spark.sql.Column) =
-      timestamp_micros(c - pmod(c, lit(1000000L)))
     raw.toDF()
       .select($"kind", $"user_id",
         sec($"alarm_us").as("alarm_ts"),
@@ -119,11 +123,8 @@ object EventPatterns {
   /** Negation matches: `(user_id, error_ts, click_ts)`. */
   def noPurchase(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val events = graft.sources.Tables.events(spark, sfDir)
-      .select($"event_id", unix_micros($"ts").as("ts_us"), $"user_id", $"event_type")
-      .as[EventRow]
     val raw = Cep.matchPattern[Long, EventRow, (Long, Long, Long)](
-      events,
+      eventRows(spark, sfDir),
       keyFn = _.user_id,
       tsFn = _.ts_us / 1000L,
       pattern = noPurchasePattern,
@@ -133,8 +134,6 @@ object EventPatterns {
           (uid, a.ts_us, c.ts_us)
         },
       emitTimeout = (_, _) => None)
-    def sec(c: org.apache.spark.sql.Column) =
-      timestamp_micros(c - pmod(c, lit(1000000L)))
     raw.toDF("user_id", "error_us", "click_us")
       .select($"user_id", sec($"error_us").as("error_ts"),
         sec($"click_us").as("click_ts"))
@@ -162,11 +161,8 @@ object EventPatterns {
     * `EventPatternsSpec` (no SQL oracle: DuckDB has no MATCH_RECOGNIZE). */
   def untilStreak(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val events = graft.sources.Tables.events(spark, sfDir)
-      .select($"event_id", unix_micros($"ts").as("ts_us"), $"user_id", $"event_type")
-      .as[EventRow]
     val raw = Cep.matchPattern[Long, EventRow, (Long, Long, Long, Int)](
-      events,
+      eventRows(spark, sfDir),
       keyFn = _.user_id,
       tsFn = _.ts_us / 1000L,
       pattern = untilPattern,
@@ -176,8 +172,6 @@ object EventPatterns {
           (uid, s.ts_us, p.ts_us, m("B").size)
         },
       emitTimeout = (_, _) => None)
-    def sec(c: org.apache.spark.sql.Column) =
-      timestamp_micros(c - pmod(c, lit(1000000L)))
     raw.toDF("user_id", "signup_us", "purchase_us", "n_between")
       .select($"user_id", sec($"signup_us").as("signup_ts"),
         sec($"purchase_us").as("purchase_ts"), $"n_between")
@@ -187,11 +181,8 @@ object EventPatterns {
   /** Funnel matches: `(user_id, signup_ts, purchase_ts, n_engagement)`. */
   def funnel(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val events = graft.sources.Tables.events(spark, sfDir)
-      .select($"event_id", unix_micros($"ts").as("ts_us"), $"user_id", $"event_type")
-      .as[EventRow]
     val raw = Cep.matchPattern[Long, EventRow, (Long, Long, Long, Int)](
-      events,
+      eventRows(spark, sfDir),
       keyFn = _.user_id,
       tsFn = _.ts_us / 1000L,
       pattern = funnelPattern,
@@ -201,8 +192,6 @@ object EventPatterns {
           (uid, s.ts_us, p.ts_us, m("E").size)
         },
       emitTimeout = (_, _) => None)
-    def sec(c: org.apache.spark.sql.Column) =
-      timestamp_micros(c - pmod(c, lit(1000000L)))
     raw.toDF("user_id", "signup_us", "purchase_us", "n_engagement")
       .select($"user_id", sec($"signup_us").as("signup_ts"),
         sec($"purchase_us").as("purchase_ts"), $"n_engagement")

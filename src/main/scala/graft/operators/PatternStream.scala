@@ -28,10 +28,6 @@ final class PatternStream[K, T] private[operators] (
     Cep.matchPattern[K, T, O](ds, keyFn, tsFn, pattern, sortCols)(
       (k, m) => Some(f(k, m)), (_, _) => None)
 
-  /** Zero-or-more output rows per match. */
-  def flatSelect[O: Encoder](f: (K, NFA.PatternMatch[T]) => IterableOnce[O]): Dataset[O] =
-    Cep.matchPattern[K, T, O](ds, keyFn, tsFn, pattern, sortCols)(f, (_, _) => None)
-
   /** Matches AND timed-out partial matches into one tagged output — the
     * engine's side-output form (SURVEY.md §7.4). */
   def flatSelectWithTimeouts[O: Encoder](

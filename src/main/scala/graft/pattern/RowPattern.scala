@@ -87,26 +87,6 @@ object RowPattern {
     out.toSet
   }
 
-  /** True when the pattern is a flat sequence of quantified variables, with
-    * at most single-variable alternation groups — the shape the legacy
-    * linear lowering handles. Anything else needs the graph compiler. */
-  def isFlat(ast: Ast): Boolean = {
-    def flatItem(a: Ast): Boolean = a match {
-      case AVar(_, _, _, _) => true
-      case AAlt(bs) => bs.forall(_.isInstanceOf[AVar]) // (B | C)
-      case AQuant(AAlt(bs), _, _, _) => bs.forall {
-        case AVar(_, 1, 1, _) => true // (B | C)+ — members unquantified
-        case _ => false
-      }
-      case AExcl(b) => flatItem(b)
-      case _ => false
-    }
-    ast match {
-      case ASeq(items) => items.forall(flatItem)
-      case other => flatItem(other)
-    }
-  }
-
   private final class Parser(src: String) {
     private var pos = 0
 

@@ -136,11 +136,6 @@ object Hashing {
     s"CASE WHEN len($w) >= 3 THEN list_transform(generate_series(1, len($w) - 2), " +
       s"i -> concat_ws(' ', $w[i], $w[i+1], $w[i+2])) ELSE [] END"
 
-  /** DuckDB: k-position string MinHash signature from shingle list `sh`. */
-  def duckMinhashSig(sh: String, k: Int): String =
-    s"list_transform(generate_series(0, ${k - 1}), i -> " +
-      s"list_min(list_transform($sh, s -> md5(CAST(i AS VARCHAR) || '|' || s))))"
-
   /** DuckDB: base md5 per shingle. */
   def duckMinhashBase(sh: String): String =
     s"list_transform($sh, s -> md5('|' || s))"

@@ -44,7 +44,7 @@ class BenchKitSpec extends AnyFunSuite {
       canaries = Seq(31.0, 30.5, 95.25),
       canariesPar = Seq(40.0, 41.0, 160.5),
       canariesMem = Seq(50.0, 52.0, 201.0),
-      ivfBuildSec = 8.1, mhBuildSec = 6.0, sfDir = "/data/sf0.1")
+      buildSec = Map("ivf" -> 8.1, "mh" -> 6.0), sfDir = "/data/sf0.1")
     val qs = BenchKit.parseDetailQueries(detail)
     assert(qs == Map("q_a" -> 1.234, "q_b" -> -1.0, "q_c" -> 6.5))
     assert(BenchKit.parseDetailQueries("{\"no_queries\":1}") == Map.empty)
@@ -59,7 +59,9 @@ class BenchKitSpec extends AnyFunSuite {
       canaries = Seq(31.0, 30.5, 95.25),
       canariesPar = Seq(40.0, 41.0, 160.5),
       canariesMem = Seq(50.0, 52.0, 201.0),
-      ivfBuildSec = 8.1, mhBuildSec = 6.0,
+      buildSec = Map("ivf" -> 8.1, "mh" -> 6.0, "clf" -> 1.5, "pq" -> 2.25,
+        "cur" -> 0.5, "tok" -> 3.0),
+      warmFailures = Map("mh.sig" -> "no such table: documents"),
       prevTimes = Map("q_a" -> 0.5, "q_b" -> 1.0, "q_d" -> 2.0),
       sfDir = "/data/sf0.1")
     // vs_prev_committed (r15 verdict #4): the per-query ratio against the
@@ -78,6 +80,13 @@ class BenchKitSpec extends AnyFunSuite {
     assert(detail.contains("\"budget_warn\":[\"q_c\"]"))
     assert(detail.contains("\\\"quoted\\\"") && detail.contains("\\n"))
     assert(detail.contains("\"queries\":{\"q_a\":1.000,\"q_b\":-1,\"q_c\":6.500}"))
+    // each artifact group's untimed build time, and every failed warm
+    // build by name (a swallowed one would hide inside a query's time)
+    Seq("ivf" -> "8.100", "mh" -> "6.000", "clf" -> "1.500", "pq" -> "2.250",
+      "cur" -> "0.500", "tok" -> "3.000").foreach { case (g, sec) =>
+      assert(detail.contains(s"\"${g}_build_sec\":$sec,"))
+    }
+    assert(detail.contains("\"warm_failures\":{\"mh.sig\":\"no such table: documents\"}"))
     // no t0s/minis supplied → empty localization fields, conservative warn
     assert(detail.contains("\"mini_canary\":[]"))
     assert(detail.contains("\"contended\":[]"))
@@ -193,7 +202,7 @@ class BenchKitSpec extends AnyFunSuite {
       canaries = Seq(400.0), canariesPar = Seq(410.0), canariesMem = Seq(420.0),
       t0s = Map("q_hot" -> 44.0, "q_slow" -> 2.0),
       minis = minis,
-      ivfBuildSec = 1.0, mhBuildSec = 1.0, sfDir = "/data/sf0.1")
+      buildSec = Map("ivf" -> 1.0, "mh" -> 1.0), sfDir = "/data/sf0.1")
     assert(detail.contains(
       "\"mini_canary\":[{\"t_s\":0.000,\"ms\":50.000,\"mem_ms\":20.000}," +
         "{\"t_s\":45.000,\"ms\":130.000,\"mem_ms\":21.000}]"))
@@ -206,5 +215,18 @@ class BenchKitSpec extends AnyFunSuite {
       Map("q_hot" -> 12.0, "q_slow" -> 6.0))
     assert(!detail.contains("\n"))
     assert(detail.count(_ == '{') == detail.count(_ == '}'))
+  }
+
+  test("summaryJson: the one stdout line counts queries, errors, reruns and " +
+    "warm failures, with the canary arrays and the detail path") {
+    val line = BenchKit.summaryJson(
+      results = Map("q_a" -> 1.0, "q_b" -> -1.0, "q_c" -> 6.5),
+      nErrors = 1, nReruns = 1, nWarmFailures = 2,
+      canaries = Seq(31.0), canariesPar = Seq(40.0), canariesMem = Seq(50.0),
+      sfDir = "/data/sf0.01")
+    assert(line == "{\"metric\":\"total\",\"value\":7.500,\"unit\":\"sec\"," +
+      "\"n_queries\":3,\"n_errors\":1,\"n_reruns\":1,\"n_warm_failures\":2," +
+      "\"canary_ms\":[31.000],\"canary_par_ms\":[40.000],\"canary_mem_ms\":[50.000]," +
+      "\"sf\":\"/data/sf0.01\",\"detail\":\"target/bench_detail.json\"}")
   }
 }

@@ -2,19 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for all suites (JVM-wide; suites run in one forked JVM). */
+/** One shared local session for all suites (JVM-wide; suites run in one
+  * forked JVM): the canonical [[GraftSession.builder]] config at 4 cores. */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.session.timeZone", "UTC")
+  lazy val spark: SparkSession = GraftSession.builder("local[4]", 4)
     .config("spark.ui.enabled", "false")
-    // transformWithState needs multi-column-family state: RocksDB provider
-    .config("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // MATCH_RECOGNIZE parser extension
-    .config("spark.sql.extensions", "graft.sql.GraftSqlExtensions")
     .getOrCreate()
 }
